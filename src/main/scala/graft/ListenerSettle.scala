@@ -1,7 +1,7 @@
 package graft
 
 /** Shared drain heuristic for counters fed by Spark's async listener
-  * bus (Bench and Tune's per-query job counters): posting an event is
+  * bus (Bench's and ProfQ's per-query job counters): posting an event is
   * synchronous but DELIVERY is not — an action can return while its
   * last JobStart still sits in the AsyncEventQueue — so a counter is
   * read only once it has been stable across one quiet window, capped

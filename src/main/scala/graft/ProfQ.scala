@@ -2,13 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-query stage profiler (dev tool, Tune/JobProbe family): runs the
+/** Per-query stage profiler (dev tool, like Prof): runs the
   * named REGISTERED queries through the Bench protocol (noop sink,
   * min-of-2, cache hygiene between runs) and prints, for the best rep,
   * every stage's wall, task count, shuffle bytes and GC — the
   * "where inside this query does the time go" attribution the compact
   * bench line cannot carry. Stage names are action call sites, so the
-  * occurrence index disambiguates (same convention as Tune.dumpStages).
+  * occurrence index disambiguates.
   *
   * Usage: runMain graft.ProfQ <sfDir> q_a[,q_b...]
   */

@@ -75,21 +75,18 @@ object Dedup {
     // below their exchanges, so exchange reuse cannot fire) — that is
     // a DETERMINISTIC 2× of one cheap single-MD5-per-window pass, not
     // a reuse cliff, and persisting the span stream instead measured
-    // SLOWER (1.4 s vs 1.3 s min-of-2 at the 10× tier, Tune ab: the
-    // cache build is a full columnar pass over the operator's largest
-    // intermediate). The Tune A/B that re-measures that call re-uses
-    // THESE helpers, differing only in the persist.
+    // SLOWER (1.4 s vs 1.3 s min-of-2 at the 10× tier: the cache build
+    // is a full columnar pass over the operator's largest
+    // intermediate).
     spanDupCounts(spanStream(df, idCol, textCol, w), idCol)
   }
 
   /** The (id, 16-byte window digest) stream behind [[duplicateSpans]]:
     * one row per DISTINCT rolling `w`-token window per doc (plus one
     * null-digest row for sub-`w` docs, so every input id survives the
-    * downstream aggregate). Shared with the Tune persist-vs-recompute
-    * A/B so the harness can never drift from the operator's
-    * tokenization/window conventions.
+    * downstream aggregate).
     */
-  private[graft] def spanStream(df: DataFrame, idCol: String,
+  private def spanStream(df: DataFrame, idCol: String,
       textCol: String, w: Int): DataFrame = {
     // tokenize into a projected column FIRST: slice(toks, i, w) inside
     // the transform lambda re-evaluates its array subtree per window,
@@ -113,7 +110,7 @@ object Dedup {
   }
 
   /** [[duplicateSpans]]' aggregation tail over a [[spanStream]]. */
-  private[graft] def spanDupCounts(spans: DataFrame,
+  private def spanDupCounts(spans: DataFrame,
       idCol: String): DataFrame = {
     // per-digest doc count via groupBy + join-back, NOT a window: the
     // window form has no map-side combine, so one boilerplate digest
@@ -218,7 +215,7 @@ object Dedup {
     * never cross to the oracle comparison, same convention as
     * [[removeDuplicateSpans]]).
     *
-    * Scale shape — MEASURED, not assumed (Tune paraskew, r13): the
+    * Scale shape — MEASURED, not assumed (SCALE.md r13): the
     * winner per digest is a `row_number() == 1` window over
     * (id, pos), because on Spark 3.5+ the rank-limit rewrite
     * (WindowGroupLimit, plan-audited to fire here) collapses hot
@@ -229,20 +226,17 @@ object Dedup {
     * the paragraph text ON the winner row, which deletes the
     * join-back a min(struct)-aggregate formulation needs: at the 100×
     * tier the window plan moves 271 vs 341 MB of text and runs 5 vs 7
-    * jobs, faster on both the natural and the hot-key corpus. The
-    * aggregate formulation survives as [[paragraphDedupAggJoin]] —
-    * the portable skew-safe shape for engines WITHOUT the
-    * WindowGroupLimit rewrite, where a bare window really does sort
-    * every hot-key copy in one task (output equality is spec-pinned).
+    * jobs, faster on both the natural and the hot-key corpus. (On an
+    * engine WITHOUT the WindowGroupLimit rewrite a bare window would
+    * sort every hot-key copy in one task; there the min(struct)
+    * aggregate + join-back is the skew-safe shape.)
     * Two text-carrying shuffles total (digest window, reassembly
     * groupBy) — the floor for reassembly semantics. Complements
     * [[duplicateSpans]] / [[removeDuplicateSpans]] (rolling-window
     * span dedup): paragraphs are aligned disjoint blocks, the unit
     * real pipelines (CCNet, RefinedWeb) dedup before any fuzzy pass.
     * `idCol` must be unique per row (the library-wide dedup
-    * convention): the window orders winners by (id, pos), and the
-    * aggregate twin's join-back relies on (id, pos) being a unique
-    * key for its spec-pinned output equality.
+    * convention): the window orders winners by (id, pos).
     */
   def paragraphDedup(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
@@ -286,7 +280,7 @@ object Dedup {
     * [[paragraphDedupNewline]]: `base` = (idCol, __paras array), `sep`
     * = the reassembly joiner. Winner per digest is the rn==1 window —
     * see [[paragraphDedup]]'s scaladoc for why that shape (map-side
-    * WindowGroupLimit) beats the agg+join twin.
+    * WindowGroupLimit) beats an aggregate + join-back.
     */
   private def paragraphKeepFirst(base: DataFrame, idCol: String,
       sep: String): DataFrame = {
@@ -352,56 +346,6 @@ object Dedup {
         size(col("__paras")).cast("long").as("n_paras"),
         size(col("__kept")).cast("long").as("n_kept"),
         md5(concat_ws(" ", col("__kept"))).as("kept_md5"))
-  }
-
-  /** Harness twin of [[paragraphDedup]] with the min(struct) AGGREGATE
-    * + join-back winner formulation — the portable skew-safe shape for
-    * engines WITHOUT the WindowGroupLimit rank-limit rewrite, where a
-    * bare window really does sort every hot-key copy in one task. On
-    * Spark 3.5+ it is strictly the worse plan (the join-back adds a
-    * text exchange and two jobs; Tune paraskew measured it slower on
-    * both the natural and the hot-key corpus), so the production
-    * operator uses the window; this stays for the A/B and as the
-    * documented fallback shape, the same convention as
-    * `clustersLabelProp`. Output is identical by construction
-    * (min(struct(id, pos)) ≡ row_number 1 ordered by (id, pos);
-    * pinned in DedupSpec) — PROVIDED `idCol` is unique per row, the
-    * same id-uniqueness convention every dedup operator here assumes:
-    * with duplicate doc ids, (id, pos) is no longer a unique key, so
-    * the join-back keeps EVERY row matching the winning (id, pos)
-    * where row_number keeps exactly one, and the two formulations
-    * silently diverge rather than fail.
-    */
-  private[graft] def paragraphDedupAggJoin(df: DataFrame, idCol: String,
-      textCol: String, k: Int): DataFrame = {
-    require(k >= 1, s"paragraph size k=$k must be >= 1")
-    val toks = col("__toks")
-    val base = df.select(col(idCol),
-      split(trim(col(textCol)), "[ \\t\\n\\r\\f]+").as("__toks"))
-    val nb = ceil(size(toks).cast("double") / lit(k.toDouble)).cast("int")
-    val ex = base.select(col(idCol),
-        posexplode(transform(sequence(lit(0), nb - 1),
-          i => concat_ws(" ", slice(toks, i * k + 1, lit(k)))))
-          .as(Seq("__pos", "__para")))
-      .withColumn("__dig", unhex(md5(col("__para"))))
-    // map-combinable winner agg; the join-back that flags survivors is
-    // AQE-skew-splittable because the winner side is one row per digest
-    val wins = ex.groupBy("__dig")
-      .agg(min(struct(col(idCol), col("__pos"))).as("__w"))
-      .select(col("__dig"), col("__w").getField(idCol).as("__wid"),
-        col("__w").getField("__pos").as("__wpos"))
-    val kept = ex.join(wins, Seq("__dig"))
-      .where(col(idCol) === col("__wid") && col("__pos") === col("__wpos"))
-    val assembled = kept.groupBy(idCol).agg(
-      count(lit(1)).as("n_kept"),
-      md5(concat_ws(" ",
-        transform(array_sort(collect_list(struct(col("__pos"), col("__para")))),
-          s => s.getField("__para")))).as("kept_md5"))
-    base.select(col(idCol), nb.cast("long").as("n_paras"))
-      .join(assembled, Seq(idCol), "left")
-      .select(col(idCol), col("n_paras"),
-        coalesce(col("n_kept"), lit(0L)).as("n_kept"),
-        coalesce(col("kept_md5"), md5(lit(""))).as("kept_md5"))
   }
 
   /** Distinct word n-shingles of the text, sorted (set semantics).
@@ -493,7 +437,7 @@ object Dedup {
 
   /** The canonical staged/verify form of a raw shingle-set column —
     * public face of the hashed representation for staging writers
-    * (CorpusStreams) and the Tune repr A/B.
+    * (CorpusStreams).
     */
   def hashShingles(c: Column): Column = hashedSh(c)
 
@@ -529,31 +473,25 @@ object Dedup {
     if (isHashedShingles(df.schema("sh").dataType)) sort_array(col("sh"))
     else hashedSh(col("sh"))
 
-  /** Truncated pre-verify representation: the HIGH 32 bits of each
-    * sorted xxhash64 shingle hash, as ints — 4 bytes/element, half the
-    * exact form's exchange bytes. `x >> 32` is monotone over signed
-    * longs, so the projection of the sorted array is ALREADY sorted
-    * (no re-sort) and always fits an int exactly (no ANSI overflow).
-    * Truncation preserves equality, so the merge-walk multiset
-    * intersect over these ints is >= the 64-bit intersect (min is
-    * superadditive over preimage counts), making [[jaccard]] over this
-    * form a sound UPPER BOUND on the exact hashed Jaccard: a pair
-    * below threshold here is definitively below threshold — the
-    * pre-verify drop rule of [[verifyRendezvousThresholded]]. (The
-    * bound's slack is a 32-bit collision between DIFFERENT shingles
-    * of the two sides: ~|A|·|B|/2³² per pair, so false survivors are
-    * ~1 per few thousand verified pairs — they cost a phase-2 exact
-    * check, never a wrong answer.)
-    */
-  private def truncSh(df: DataFrame): Column =
-    transform(verifySh(df), x => shiftright(x, 32).cast("int"))
-
-  /** 16-bit tier of [[truncSh]]: high 16 bits as smallints — a QUARTER
-    * of the exact form's bytes/element. Same monotonicity (`x >> 48`
-    * over sorted signed longs) and the same upper-bound soundness; the
-    * looser bound admits ~|A|·|B|/2¹⁶ expected spurious intersections
-    * per pair (~0.04 at the corpus's measured m≈51) — false survivors
-    * that cost one phase-2 exact check each, never a wrong answer.
+  /** Truncated pre-verify representation: the HIGH 16 bits of each
+    * sorted xxhash64 shingle hash, as smallints — 2 bytes/element, a
+    * QUARTER of the exact form's exchange bytes. `x >> 48` is monotone
+    * over signed longs, so the projection of the sorted array is
+    * ALREADY sorted (no re-sort) and always fits a smallint exactly
+    * (no ANSI overflow). Truncation preserves equality, so the
+    * merge-walk multiset intersect over these values is >= the 64-bit
+    * intersect (min is superadditive over preimage counts), making
+    * [[jaccard]] over this form a sound UPPER BOUND on the exact
+    * hashed Jaccard: a pair below threshold here is definitively below
+    * threshold — the pre-verify drop rule of
+    * [[verifyRendezvousThresholded]]. The bound's slack is a 16-bit
+    * collision between DIFFERENT shingles of the two sides:
+    * ~|A|·|B|/2¹⁶ expected spurious intersections per pair (~0.04 at
+    * the corpus's measured m≈51) — false survivors that cost one
+    * phase-2 exact check each, never a wrong answer. In the 1000×-tier
+    * interleaved A/B (SCALE.md r16 `pv1000`) the 16-bit form beat the
+    * one-phase verify (−1.24× wall, −2.6× verify bytes) and matched
+    * the 32-bit form's wall with 3.6 GB fewer bytes.
     */
   private def truncSh16(df: DataFrame): Column =
     transform(verifySh(df), x => shiftright(x, 48).cast("smallint"))
@@ -586,40 +524,14 @@ object Dedup {
     // the kernel runs once PER SIDE. Persisting trades that cliff for
     // one columnar cache build of ~24-byte (id, band, bucket) rows —
     // measured FASTER even when reuse fires (4.3 s vs 5.5 s min-of-2
-    // at the 10× tier, Tune ab) because the cache build also replaces
-    // the double shuffle write. The verify-side shingle recomputes
-    // stay unpersisted map passes (string-array caches cost more than
-    // they save — Tune ab, r8). MinhashPlanSpec pins the single-
-    // sketch-subtree shape so a regression fails CI instead of
-    // doubling the 100 TB sketch bill.
+    // at the 10× tier) because the cache build also replaces the
+    // double shuffle write. The verify-side shingle recomputes stay
+    // unpersisted map passes (string-array caches cost more than they
+    // save — r8). MinhashPlanSpec pins the single-sketch-subtree shape
+    // so a regression fails CI instead of doubling the 100 TB sketch
+    // bill.
     minhashPairsFromIndex(
       oneShotIndex(df, idCol, textCol, n, k, bands, fastKernel), threshold)
-
-  /** [[minhashPairs]] on the array-carry verify ([[verifyCarry]]) —
-    * the Tune A/B twin of the production rendezvous pipeline, stage-
-    * identical to the r13 shape (the unused __bk column prunes out of
-    * the carry's distinct).
-    */
-  private[graft] def minhashPairsCarry(df: DataFrame, idCol: String,
-      textCol: String, n: Int = 2, k: Int = 16, bands: Int = 8,
-      threshold: Double = 0.3, fastKernel: Boolean = true): DataFrame = {
-    val idx = oneShotIndex(df, idCol, textCol, n, k, bands, fastKernel)
-    verifyCarry(selfCollisions(idx), idx.shingles, idx.shingles)
-      .filter(col("jaccard") >= threshold)
-  }
-
-  /** [[minhashPairs]] with the rendezvous verify FORCED (size gate
-    * off) — the other Tune A/B twin; production [[minhashPairs]]
-    * routes by the measured [[RendezvousMinPairs]] crossover instead.
-    */
-  private[graft] def minhashPairsRendezvous(df: DataFrame, idCol: String,
-      textCol: String, n: Int = 2, k: Int = 16, bands: Int = 8,
-      threshold: Double = 0.3, fastKernel: Boolean = true): DataFrame = {
-    val idx = oneShotIndex(df, idCol, textCol, n, k, bands, fastKernel)
-    verifyRendezvous(selfCollisions(idx), idx.shingles, idx.shingles,
-        minPairs = 0L)
-      .filter(col("jaccard") >= threshold)
-  }
 
   /** [[minhashIndexView]] with ONLY the bucket table persisted — the
     * one-shot pipeline shape (see [[minhashPairs]]). StageCache-
@@ -705,20 +617,14 @@ object Dedup {
     MinhashIndex(sh, b)
   }
 
-  /** [[minhashPairs]] over a pre-built index — lets a caller who
-    * already holds the sketches (e.g. CorpusStreams.admitBatch, which
-    * also probes and stages them) pair without re-sketching.
-    */
   /** Every bucket-collision candidate pair with its exact Jaccard —
     * the UNthresholded verify behind [[minhashEval]] (its precision
     * aggregate needs below-threshold scores, so the truncated
     * pre-verify can never apply here). [[minhashPairsFromIndex]]
     * shares [[selfCollisions]] with this but routes through
     * [[verifyRendezvousThresholded]] since r16 — its threshold is
-    * what unlocks the pre-verify. Verify shape: [[verifyRendezvous]]
-    * (the r14 production path); the r13-and-earlier array-carry shape
-    * survives as [[verifyCarry]] for the A/B harness and the
-    * equivalence pins.
+    * what unlocks the pre-verify. Verify shape: [[verifyRendezvous]],
+    * size-routed between the rendezvous and carry shapes.
     */
   private def scoredCandidates(index: MinhashIndex): DataFrame =
     verifyRendezvous(selfCollisions(index), index.shingles, index.shingles)
@@ -741,11 +647,34 @@ object Dedup {
       .select(xxhash64(col("band"), col("bucket")).as("__bk"),
         col("id_a"), col("id_b"))
 
+  /** Candidate-count crossover between the two verify shapes (SCALE.md
+    * r14, all interleaved min-of-4): below it the carry shape wins
+    * because AQE keeps its verify joins broadcast-side and the
+    * per-pair arrays never shuffle at all (10×: 1.06M candidates,
+    * carry 1.9-2.5 s / 9 MB vs rendezvous 4.3-5.3 s / 180 MB; 30×:
+    * 3.2M, 3.6 vs 6.9 s / 28 vs 571 MB); above it the broadcast regime
+    * dies and the rendezvous shape wins increasingly (100×: 10.6M
+    * candidates, 9.77 vs 10.36 s and 2.41 vs 2.78 GB; 1000×: 106M,
+    * 129.8 vs 228.8 s and 25.9 vs 44.3 GB, GC 88 vs 108-122 s). The
+    * gate = geometric midpoint of the 3.2M-carry-wins and
+    * 10.6M-rv-wins brackets, measured on a 32-core, 96 GB-heap host.
+    */
+  private[graft] val RendezvousMinPairs: Long = 6000000L
+
+  /** `minPairs` value forcing the carry shape WITHOUT the pair-table
+    * persist or the count job the size gate needs. For callers whose
+    * candidate volume is bounded small by construction — the streaming
+    * admission path above all, where one extra scheduled job and a
+    * persist/unpersist PER MICRO-BATCH is exactly the per-batch fixed
+    * cost SCALE.md r12 measures as dominant for continuous ingest.
+    */
+  private[graft] val VerifyForceCarry: Long = -1L
+
   /** Rendezvous-bucket exact-Jaccard verify — the r14 replacement for
-    * the array-carry shape ([[verifyCarry]]), built on one structural
-    * fact: every LSH candidate pair already CO-OCCURS in at least one
-    * bucket, so the pair can be verified AT a bucket instead of
-    * carrying shingle arrays through per-pair joins.
+    * the array-carry shape ([[verifyCarry]]) at scale, built on one
+    * structural fact: every LSH candidate pair already CO-OCCURS in at
+    * least one bucket, so the pair can be verified AT a bucket instead
+    * of carrying shingle arrays through per-pair joins.
     *
     * Input: `collisions` = (__bk, id_a, id_b), one row per
     * (bucket, pair) collision; `docsA`/`docsB` = (id, sh) shingle
@@ -788,92 +717,28 @@ object Dedup {
     *
     * The pair table is StageCache-persisted (three consumers: the
     * rendezvous routing frame(s) and the join spine) — same release
-    * contract as [[minhashPairs]]. `minPairs` routing: the default
-    * [[VerifyUseConf]] reads [[RendezvousMinPairsConfKey]] at call
-    * time; 0 forces this rendezvous shape; any negative value
-    * ([[VerifyForceCarry]]) forces the carry shape AND skips the
-    * persist + count job entirely (the micro-batch admission path).
+    * contract as [[minhashPairs]]. `minPairs` routing: below the
+    * gate (default [[RendezvousMinPairs]]) the carry shape runs on
+    * the persisted pair table; 0 forces this rendezvous shape; any
+    * negative value ([[VerifyForceCarry]]) forces the carry shape AND
+    * skips the persist + count job entirely (the micro-batch
+    * admission path). Specs pass `minPairs` to pin either side.
     */
-  /** Candidate-count crossover between the two verify shapes (Tune
-    * mhrv/mhrv10/mhrv30, r14, all interleaved min-of-4): below it the
-    * carry shape wins because AQE keeps its verify joins broadcast-
-    * side and the per-pair arrays never shuffle at all (10×: 1.06M
-    * candidates, carry 1.9-2.5 s / 9 MB vs rendezvous 4.3-5.3 s /
-    * 180 MB; 30×: 3.2M, 3.6 vs 6.9 s / 28 vs 571 MB); above it the
-    * broadcast regime dies and the rendezvous shape wins increasingly
-    * (100×: 10.6M candidates, 9.77 vs 10.36 s and 2.41 vs 2.78 GB;
-    * 1000×: 106M, 129.8 vs 228.8 s and 25.9 vs 44.3 GB, GC 88 vs
-    * 108-122 s). Default = geometric midpoint of the 3.2M-carry-wins
-    * and 10.6M-rv-wins brackets — measured on THIS host (local[32],
-    * 96 GB heap); a cluster's broadcast-regime boundary differs, so
-    * the default is overridable per session via
-    * [[RendezvousMinPairsConfKey]] without touching call sites.
-    */
-  private[graft] val RendezvousMinPairs: Long = 6000000L
-
-  /** Session conf overriding [[RendezvousMinPairs]] — read at CALL
-    * time by [[verifyRendezvous]] whenever the caller leaves
-    * `minPairs` at its [[VerifyUseConf]] default, so one
-    * `spark.conf.set` retunes every size-routed verify in the session
-    * (routing pins per gate side in DedupSpec).
-    */
-  val RendezvousMinPairsConfKey: String = "spark.graft.rendezvousMinPairs"
-
-  /** `minPairs` sentinel: resolve the gate from
-    * [[RendezvousMinPairsConfKey]] (default [[RendezvousMinPairs]])
-    * at call time.
-    *
-    * `Long.MinValue` is RESERVED as this sentinel: a caller passing it
-    * literally (intending "very negative = force carry") gets conf
-    * routing instead — pass [[VerifyForceCarry]] (any negative value)
-    * for that. The reservation is in-band by design: `minPairs` is a
-    * COUNT threshold, and no real gate sits at -2^63.
-    */
-  val VerifyUseConf: Long = Long.MinValue
-
-  /** `minPairs` sentinel: force the carry shape WITHOUT the pair-table
-    * persist or the count job the size gate needs. For callers whose
-    * candidate volume is bounded small by construction — the streaming
-    * admission path above all, where one extra scheduled job and a
-    * persist/unpersist PER MICRO-BATCH is exactly the per-batch fixed
-    * cost SCALE.md r12 measures as dominant for continuous ingest.
-    */
-  val VerifyForceCarry: Long = -1L
-
-  /** Resolve a `minPairs` argument to the effective gate: the
-    * [[VerifyUseConf]] sentinel reads [[RendezvousMinPairsConfKey]]
-    * at call time (parse failure names the conf key — r15 ADVICE);
-    * anything else passes through.
-    */
-  private def resolveVerifyGate(spark: org.apache.spark.sql.SparkSession,
-      minPairs: Long): Long =
-    if (minPairs == VerifyUseConf) {
-      val raw = spark.conf.get(
-        RendezvousMinPairsConfKey, RendezvousMinPairs.toString)
-      try raw.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$RendezvousMinPairsConfKey must be a Long (candidate-pair " +
-            s"gate; 0 forces rendezvous, negative forces carry), got '$raw'")
-      }
-    } else minPairs
-
   private[graft] def verifyRendezvous(collisions: DataFrame,
       docsA: DataFrame, docsB: DataFrame,
-      minPairs: Long = VerifyUseConf): DataFrame = {
-    val gate = resolveVerifyGate(collisions.sparkSession, minPairs)
-    // forced carry (gate < 0): no pair-table persist, no count job —
-    // verifyCarry's own distinct() dedupes collisions in-plan. The
+      minPairs: Long = RendezvousMinPairs): DataFrame = {
+    // forced carry (minPairs < 0): no pair-table persist, no count job
+    // — verifyCarry's own distinct() dedupes collisions in-plan. The
     // micro-batch path: below the crossover by contract, and the gate's
     // count would be one extra scheduled job per batch.
-    if (gate < 0) return verifyCarry(collisions, docsA, docsB)
+    if (minPairs < 0) return verifyCarry(collisions, docsA, docsB)
     val pairTable = graft.ops.StageCache.persisted(
       collisions.groupBy("id_a", "id_b").agg(min(col("__bk")).as("__rv")))
     // size-routed: ONE count over the (persisted, needed-anyway) pair
     // table picks the measured-faster shape — the small side of the
     // crossover is also the one-shot sf0.1-scale case, so those stay
     // on the broadcast-friendly carry plan.
-    // gate = 0 forces the rendezvous shape (specs, Tune arms).
-    if (gate > 0 && pairTable.count() < gate)
+    if (pairTable.count() < minPairs)
       return verifyCarryOn(pairTable.select("id_a", "id_b"), docsA, docsB)
     rendezvousScored(pairTable, docsA, docsB, verifySh)
       .select(col("id_a"), col("id_b"),
@@ -885,8 +750,9 @@ object Dedup {
     * group. `pairTable` = (id_a, id_b, __rv), unique per pair (the
     * min-__bk agg or a filtered survivor table); `shOf` picks the
     * representation that crosses the group-map exchange — [[verifySh]]
-    * (full sorted xxhash64 longs, the exact phase) or [[truncSh]]
-    * (high-32-bit ints, the pre-verify phase at half the bytes).
+    * (full sorted xxhash64 longs, the exact phase) or [[truncSh16]]
+    * (high-16-bit smallints, the pre-verify phase at a quarter of the
+    * bytes).
     * Returns (id_a, id_b, __rv, sh_a, sh_b), missing-doc pairs
     * dropped. __rv rides through so a filtered survivor set can re-
     * enter this core for the exact phase without recomputing min(__bk).
@@ -948,16 +814,18 @@ object Dedup {
     scored.filter(col("sh_a").isNotNull && col("sh_b").isNotNull)
   }
 
-  /** The r13-and-earlier verify shape: dedupe candidate pairs, then
-    * carry each pair's sh_a array through two per-pair equi-joins.
-    * Correct, but its join-1 output exchanges Θ(pairs × |sh|) array
-    * bytes (36.4 of 44.3 GB at the 1000× tier, r13 mhdiag), rescued
-    * only partially — and partition-count-sensitively — by SMJ/LZ4
-    * run-length adjacency (~194 B/pair at p=32, 343 at p=128; a
-    * SHUFFLE_HASH hint that broke the adjacency measured 478 B/pair
-    * and was reverted, SCALE.md r13). Kept for the Tune A/B and the
-    * DedupSpec equivalence pins against [[verifyRendezvous]], the
-    * same convention as `clustersLabelProp` / `paragraphDedupAggJoin`.
+  /** The array-carry verify shape: dedupe candidate pairs, then carry
+    * each pair's sh_a array through two per-pair equi-joins. This is
+    * the live route below [[RendezvousMinPairs]] candidates (AQE keeps
+    * both joins broadcast-side, so no per-pair array shuffles) and on
+    * the streaming admission path ([[VerifyForceCarry]]). At scale its
+    * join-1 output exchanges Θ(pairs × |sh|) array bytes (36.4 of
+    * 44.3 GB at the 1000× tier, r13 mhdiag), rescued only partially —
+    * and partition-count-sensitively — by SMJ/LZ4 run-length adjacency
+    * (~194 B/pair at p=32, 343 at p=128; a SHUFFLE_HASH hint that broke
+    * the adjacency measured 478 B/pair and was reverted, SCALE.md r13)
+    * — which is why the big side routes to [[verifyRendezvous]]'s
+    * rendezvous shape. DedupSpec pins the two shapes' equivalence.
     */
   private[graft] def verifyCarry(collisions: DataFrame,
       docsA: DataFrame, docsB: DataFrame): DataFrame =
@@ -979,23 +847,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
 
-  /** Session conf selecting the truncated-hash pre-verify inside
-    * [[verifyRendezvousThresholded]]'s big-gate path, read at call
-    * time: "16" (high-16-bit smallints, quarter bytes — the measured
-    * default), "32"/"true" (high-32-bit ints, half bytes), or
-    * "off"/"false" (one-phase exact verify). Exists so the Tune A/B
-    * can interleave the shapes in one session, and so a corpus whose
-    * LSH candidates are mostly TRUE positives (where phase 2 re-ships
-    * nearly everything and the prefilter only adds a pass) can opt
-    * out without touching call sites.
-    */
-  val VerifyPrefilterConfKey: String = "spark.graft.verifyPrefilter"
-
-  /** Default for [[VerifyPrefilterConfKey]] — set by the r16 1000×-tier
-    * interleaved A/B (SCALE.md r16 `pv1000`).
-    */
-  private[graft] val VerifyPrefilterDefault: String = "16"
-
   /** Phase-2 routing-table broadcast bound: the survivor pair table's
     * (id, __rv) rows are ≤ 2 per pair × 16 bytes, so this caps the
     * broadcast build at ~64 MB of raw entries — comfortably under
@@ -1013,35 +864,32 @@ object Dedup {
     * family at scale (~26 GB of verify shuffle per 5M docs made the
     * 20M-doc cell disk-infeasible, SCALE.md r15):
     *
-    *  - phase 1 runs the rendezvous core with a truncated form of the
-    *    hashes — high-16-bit smallints ([[truncSh16]], a QUARTER of
-    *    the sorted-long form's bytes; the measured default) or
-    *    high-32-bit ints ([[truncSh]], half) per
-    *    [[VerifyPrefilterConfKey]] — and drops every pair whose
-    *    truncated Jaccard — a sound upper bound on the exact hashed
-    *    Jaccard, see [[truncSh]] — is already below `threshold`;
+    *  - phase 1 runs the rendezvous core with the high-16-bit
+    *    truncation of the hashes ([[truncSh16]], a QUARTER of the
+    *    sorted-long form's bytes) and drops every pair whose truncated
+    *    Jaccard — a sound upper bound on the exact hashed Jaccard, see
+    *    [[truncSh16]] — is already below `threshold`;
     *  - phase 2 re-verifies ONLY the survivors with the full 64-bit
     *    form, re-entering the rendezvous core via the __rv each
     *    survivor kept from phase 1, with the survivor routing table
     *    broadcast below [[PreVerifyBroadcastMaxPairs]] so the corpus
     *    side crosses no exchange at all.
     *
-    * Exchange bytes ≈ 0.5·B + s·B (B = one-phase bytes, s = the
-    * survivor share), so the prefilter pays whenever under ~half of
-    * the LSH candidates are true near-dups — the normal regime: LSH
-    * bands are tuned for recall, so candidate precision at the
-    * threshold is low. Results are BIT-IDENTICAL either way: phase 1
-    * can only drop pairs that phase 2/the one-phase verify would have
-    * filtered (upper bound), and survivors get the exact score.
+    * Exchange bytes ≈ 0.25·B + s·B (B = one-phase bytes, s = the
+    * survivor share), so the prefilter pays whenever under ~three
+    * quarters of the LSH candidates are true near-dups — the normal
+    * regime: LSH bands are tuned for recall, so candidate precision at
+    * the threshold is low. Results are BIT-IDENTICAL to the one-phase
+    * verify: phase 1 can only drop pairs that the exact score would
+    * have filtered (upper bound), and survivors get the exact score.
     *
-    * Routing/sentinels are [[verifyRendezvous]]'s: `minPairs` < 0
-    * forces the carry (no persist, no count job — the micro-batch
-    * path), 0 forces the two-phase rendezvous, [[VerifyUseConf]] reads
-    * the session gate. The pre-verify itself is toggled by
-    * [[VerifyPrefilterConfKey]].
+    * Routing is [[verifyRendezvous]]'s: `minPairs` < 0 forces the
+    * carry (no persist, no count job — the micro-batch path), 0 forces
+    * the two-phase rendezvous, and the default gates on
+    * [[RendezvousMinPairs]].
     *
-    * PARTITIONING AT SCALE (`spark.sql.shuffle.partitions`; Tune
-    * spillp, SCALE.md r16): the verify's sort/aggregation SPILL is
+    * PARTITIONING AT SCALE (`spark.sql.shuffle.partitions`; SCALE.md
+    * r16): the verify's sort/aggregation SPILL is
     * volume-bound, not partition-fit — at 10M docs/212M candidates it
     * measured a flat ~41 GB across p ∈ {256, 512, 1024} — but WALL
     * improves monotonically with p (507/451/372 s), so size p up with
@@ -1052,30 +900,14 @@ object Dedup {
     */
   private[graft] def verifyRendezvousThresholded(collisions: DataFrame,
       docsA: DataFrame, docsB: DataFrame, threshold: Double,
-      minPairs: Long = VerifyUseConf): DataFrame = {
-    val spark = collisions.sparkSession
-    val gate = resolveVerifyGate(spark, minPairs)
-    if (gate < 0)
+      minPairs: Long = RendezvousMinPairs): DataFrame = {
+    if (minPairs < 0)
       return verifyCarry(collisions, docsA, docsB)
         .filter(col("jaccard") >= threshold)
     val pairTable = graft.ops.StageCache.persisted(
       collisions.groupBy("id_a", "id_b").agg(min(col("__bk")).as("__rv")))
-    if (gate > 0 && pairTable.count() < gate)
+    if (pairTable.count() < minPairs)
       return verifyCarryOn(pairTable.select("id_a", "id_b"), docsA, docsB)
-        .filter(col("jaccard") >= threshold)
-    val prefilter = spark.conf.get(VerifyPrefilterConfKey,
-      VerifyPrefilterDefault) match {
-      case "off" | "false" => None
-      case "32" | "true" => Some(truncSh _)
-      case "16" => Some(truncSh16 _)
-      case other => throw new IllegalArgumentException(
-        s"$VerifyPrefilterConfKey must be one of off/false, 32/true, 16; " +
-          s"got '$other'")
-    }
-    if (prefilter.isEmpty)
-      return rendezvousScored(pairTable, docsA, docsB, verifySh)
-        .select(col("id_a"), col("id_b"),
-          jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
         .filter(col("jaccard") >= threshold)
     // phase 1: truncated upper bound — drop definitive non-matches.
     // Persisted: the survivor table is consumed three times on the
@@ -1083,7 +915,7 @@ object Dedup {
     // the join spine); it must not recompute the phase-1 group maps
     // per consumer.
     val survivors = graft.ops.StageCache.persisted(
-      rendezvousScored(pairTable, docsA, docsB, prefilter.get)
+      rendezvousScored(pairTable, docsA, docsB, truncSh16)
         .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
         .select("id_a", "id_b", "__rv"))
     // phase 2: exact verify of the survivors, ALWAYS on the rendezvous
@@ -1102,6 +934,9 @@ object Dedup {
     exact.filter(col("jaccard") >= threshold)
   }
 
+  /** [[minhashPairs]] over a pre-built index — lets a caller who
+    * already holds the sketches pair without re-sketching.
+    */
   def minhashPairsFromIndex(index: MinhashIndex,
       threshold: Double): DataFrame =
     verifyRendezvousThresholded(selfCollisions(index),
@@ -1140,28 +975,24 @@ object Dedup {
     * unioning their drop sides — but the fused form shares one bucket
     * join, one candidate dedupe and one verify stage where the split
     * form pays each twice (measured 27 → 19 scheduled jobs, −30%, for
-    * the steady-state probe batch at the 10× tier via graft.JobProbe;
-    * the bootstrap batch ties at 17 since it has no staged probe to
-    * fuse. With AQE every exchange is its own scheduled job, and
-    * per-batch fixed cost × batch count is what dominates a continuous
-    * ingest stream — SCALE.md r12).
+    * the steady-state probe batch at the 10× tier; the bootstrap batch
+    * ties at 17 since it has no staged probe to fuse. With AQE every
+    * exchange is its own scheduled job, and per-batch fixed cost ×
+    * batch count is what dominates a continuous ingest stream —
+    * SCALE.md r12).
     *
     * `staged = None` is the bootstrap batch (within-batch rule only).
     * Returns distinct batch ids to drop, column `id`.
     *
-    * `verifyMinPairs` defaults to [[VerifyForceCarry]]: a micro-batch's
-    * candidate volume is bounded by |batch| × bands × collisions —
-    * far below the rendezvous crossover for any sane batch size — and
-    * the size gate's pair-table persist + count job would be one
-    * extra scheduled job PER BATCH, the per-batch fixed cost that
-    * dominates continuous ingest (SCALE.md r12: every exchange is its
-    * own scheduled job under AQE, × batch count). A bulk-backfill
-    * caller feeding corpus-scale "batches" should pass
-    * `Dedup.VerifyUseConf` to restore the measured size gate.
+    * The verify always takes the carry shape ([[VerifyForceCarry]]): a
+    * micro-batch's candidate volume is bounded by |batch| × bands ×
+    * collisions — far below the rendezvous crossover for any sane
+    * batch size — and the size gate's pair-table persist + count job
+    * would be one extra scheduled job PER BATCH, the per-batch fixed
+    * cost that dominates continuous ingest (SCALE.md r12).
     */
   def admissionDrops(batchIdx: MinhashIndex, staged: Option[MinhashIndex],
-      threshold: Double,
-      verifyMinPairs: Long = VerifyForceCarry): DataFrame = {
+      threshold: Double): DataFrame = {
     val batchB = batchIdx.buckets
       .select(col("band"), col("bucket"), col("id").as("id_b"),
         lit(false).as("__staged"))
@@ -1194,7 +1025,7 @@ object Dedup {
       .select(xxhash64(col("band"), col("bucket")).as("__bk"),
         col("id_a"), col("id_b"))
     verifyRendezvousThresholded(cand, batchIdx.shingles, otherSh,
-        threshold, verifyMinPairs)
+        threshold, VerifyForceCarry)
       .select(col("id_a").as("id")).distinct()
   }
 
@@ -1241,7 +1072,7 @@ object Dedup {
     * shingling on both the bucket and the verify branches (the
     * shared subtree is deduped only by best-effort exchange reuse).
     * Measured at the 10×-documents tier: 3.44 s → 1.78 s min-of-2 for
-    * the fuzzy-decontamination pipeline (Tune ab, round 11).
+    * the fuzzy-decontamination pipeline (SCALE.md r11).
     *
     * Same contract as [[incrementalMinhashPairsFromIndex]]: returns
     * (id_a = corpus id, id_b = index id, jaccard ≥ threshold); corpus
@@ -1258,45 +1089,35 @@ object Dedup {
     *    slower than the incremental fallback at [4.5M corpus × 500k
     *    index] (108.9 vs 55.3 s) and the r13 guard capped index docs
     *    at 100k on that evidence;
-    *  - r13's `Tune fuzzyxo` sweep showed broadcast WINNING at every
+    *  - r13's `fuzzyxo` sweep showed broadcast WINNING at every
     *    index size through 400k on a 1M-doc corpus (the "interaction
     *    wall" hypothesis);
-    *  - r14's `Tune fuzzyxo2` re-ran BOTH brackets interleaved on the
+    *  - r14's `fuzzyxo2` re-ran BOTH brackets interleaved on the
     *    hashed-verify code and the r12 wall is GONE: broadcast wins
     *    both [1M × 400k] (13.8-28.2 s vs 25.4-49.4 s incremental) and
     *    [4.5M × 500k] (39.2-44.5 s vs 82.3-112.9 s) — the r12 number
     *    was the string-era verify's cost, not a broadcast property,
-    *    and a product gate calibrated on it picked the LOSER at
-    *    bracket B on current code.
-    * The default guard is therefore the ABSOLUTE broadcast-size bound
-    * only: `maxIndexDocs` (default 2M ≈ 0.8 GB of hashed shingle
-    * sets, safely under Spark's 8 GB broadcast limit and a sane
+    *    and a corpus×index product gate calibrated on it picked the
+    *    LOSER at bracket B on current code (SCALE.md r14).
+    * The guard is therefore the ABSOLUTE broadcast-size bound only:
+    * `maxIndexDocs` (default 2M ≈ 0.8 GB of hashed shingle sets,
+    * safely under Spark's 8 GB broadcast limit and a sane
     * driver-collect/per-task-build ceiling; no measured perf wall
-    * below it on this host). `maxProductDocs` (default 0 = OFF) keeps
-    * the corpus×index interaction term available for cluster owners
-    * who measure a wall this host does not show — when > 0, the call
-    * counts the corpus (one job, metadata-served for a bare parquet
-    * scan) and falls back when indexDocs × corpusDocs exceeds it.
-    * ABOVE either bound the call AUTO-FALLS-BACK to the big-vs-big
+    * below it). ABOVE it the call AUTO-FALLS-BACK to the big-vs-big
     * staged-index probe ([[incrementalMinhashPairsFromIndex]] with
     * `smallIndex` as the probed corpus — same (id_a=corpus,
     * id_b=index, jaccard) contract, equivalence pinned in DedupSpec)
-    * instead of require-failing. maxIndexDocs = 0 disables BOTH
-    * checks (always broadcast).
+    * instead of require-failing. maxIndexDocs = 0 disables the check
+    * (always broadcast).
     */
   def minhashPairsBroadcastIndex(smallIndex: MinhashIndex,
       corpus: DataFrame, idCol: String, textCol: String, n: Int = 2,
       k: Int = 16, bands: Int = 8, threshold: Double = 0.3,
       fastKernel: Boolean = true,
-      maxIndexDocs: Long = 2000000L,
-      maxProductDocs: Long = 0L): DataFrame = {
+      maxIndexDocs: Long = 2000000L): DataFrame = {
     if (maxIndexDocs > 0) {
       val nIdx = smallIndex.shingles.count()
-      val overProduct = maxProductDocs > 0 && {
-        val nCorpus = corpus.count()
-        nIdx * nCorpus > maxProductDocs
-      }
-      if (nIdx > maxIndexDocs || overProduct) {
+      if (nIdx > maxIndexDocs) {
         // big-vs-big fallback: past the broadcast probe's measured
         // economical regime — probe the index as a staged corpus
         // instead (the corpus sketches itself as the delta). Same
@@ -1304,13 +1125,11 @@ object Dedup {
         // broadcast shape avoids is exactly the trade that WINS once
         // the per-task broadcast build dominates. ANNOUNCED, because a
         // silent plan switch poisons cross-tier timing comparisons (a
-        // Tune alpha row mixing the broadcast plan at one tier with
-        // this shape at the next is not one pipeline's exponent).
-        val why = if (nIdx > maxIndexDocs)
-          s"index has $nIdx docs > maxIndexDocs=$maxIndexDocs"
-        else s"index x corpus doc product exceeds maxProductDocs=$maxProductDocs"
-        println(s"[dedup] minhashPairsBroadcastIndex: $why — auto-falling " +
-          "back to the big-vs-big incremental probe plan")
+        // scaling row mixing the broadcast plan at one tier with this
+        // shape at the next is not one pipeline's exponent).
+        println(s"[dedup] minhashPairsBroadcastIndex: index has $nIdx " +
+          s"docs > maxIndexDocs=$maxIndexDocs — auto-falling back to " +
+          "the big-vs-big incremental probe plan")
         return incrementalMinhashPairsFromIndex(smallIndex,
           minhashIndexView(corpus, idCol, textCol, n, k, bands, fastKernel),
           threshold)
@@ -1525,7 +1344,7 @@ object Dedup {
   /** Round telemetry for [[clusters]]' distributed path — the
     * 100 TB cost model is rounds × (join + agg + jump), so the round
     * count is the number to pin (DedupSpec) and to record per tier
-    * (Tune cc / SCALE.md). Same pattern as Ann.TrainTelemetry:
+    * (SCALE.md). Same pattern as Ann.TrainTelemetry:
     * invisible in the physical plan, so a hook counts it.
     */
   private[graft] object ClusterTelemetry {
@@ -1586,89 +1405,10 @@ object Dedup {
         .toDF("id", "cluster")
     }
     // 100 TB route: large-star/small-star edge contraction — measured
-    // (Tune cc, r12) ~2× faster than min-label propagation at the 100×
+    // (SCALE.md r12) ~2× faster than min-label propagation at the 100×
     // tier (7.2 vs 15.5 s) with a DIAMETER-INDEPENDENT round count
-    // (6 rounds at both tiers vs 11/16). The label-prop shape stays
-    // below as [[clustersLabelProp]] for the A/B harness and its
-    // regression pins.
+    // (6 rounds at both tiers vs 11/16).
     starContract(edgePairs, maxIters)
-  }
-
-  /** The r8–r11 distributed route: iterative min-label propagation
-    * with one pointer jump (path halving) per round. Superseded as
-    * [[clusters]]' distributed path by [[starContract]] (measured r12:
-    * label-prop rounds are bound by the min node's eccentricity —
-    * hop-by-hop spread through the edge topology — where star
-    * contraction collapses distances multiplicatively), kept for the
-    * Tune cc A/B and the pointer-jumping regression pin in DedupSpec.
-    */
-  private[graft] def clustersLabelProp(pairs: DataFrame,
-      idA: String = "id_a", idB: String = "id_b",
-      maxIters: Int = 20, jumpsPerRound: Int = 1): DataFrame = {
-    require(jumpsPerRound >= 1, "clusters: jumpsPerRound must be >= 1")
-    val edgePairs = pairs
-      .select(clusterIdOrFail(idA).as("a"), clusterIdOrFail(idB).as("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = edgePairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(edgePairs.select(col("b").as("src"), col("a").as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    // ONE action per round: the checkpoint is lazy and materializes
-    // under the sum() job, and convergence is "Σlabel stopped
-    // decreasing" (labels only ever decrease, so equal sums ⟺ no
-    // label moved) — an eager checkpoint + join-diff convergence
-    // check costs ~4 scheduled jobs per round, which dominated the
-    // whole operator at bench scale
-    // The convergence sum runs over decimal(38,0), not long: with
-    // hash-derived 64-bit ids a LongType sum can overflow (ANSI mode
-    // would throw ARITHMETIC_OVERFLOW mid-loop). 38 digits holds
-    // Σ(2^63) over ~10^19 rows — unreachable.
-    var prevSum = Option.empty[java.math.BigDecimal]
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("label"))
-      val m = labels.unionByName(prop)
-        .groupBy("id").agg(min("label").as("label"))
-      // pointer jump (path halving): label := label(label). Every
-      // label IS a member node's id, so the self-join always hits;
-      // labels only decrease, so label2 <= label. Neighbor
-      // propagation alone needs diameter rounds — with the jump the
-      // round count drops to O(log diameter), and rounds (fixed
-      // scheduling + tiny-shuffle latency, ~0.5s each regardless of
-      // data size) are the entire cost of this operator.
-      //
-      // jumpsPerRound > 1 is a MEASURED NEGATIVE (Tune cc, r12): extra
-      // jumps never removed a single round at either tier (11 rounds
-      // at 10×, 16 at 100×, identical for j=1..3) — after the min
-      // aggregate the label map is already so shallow that one jump
-      // flattens it; round count is bound by hop-by-hop min spread
-      // through the edge topology, which jumping cannot shortcut.
-      // They're also not free: each jump references the round frame
-      // twice, doubling the uncheckpointed plan per jump (j=3 measured
-      // 1.5-8× the per-round cost). The knob stays for the A/B
-      // harness; 1 is the measured default.
-      val next = (1 to jumpsPerRound).foldLeft(m) { (cur, _) =>
-        cur.join(cur.select(col("id").as("label"), col("label").as("label2")),
-            "label")
-          .select(col("id"), col("label2").as("label"))
-      }.localCheckpoint(false)
-      val s = next.agg(sum(col("label").cast("decimal(38,0)")))
-        .first().getDecimal(0)
-      converged = prevSum.exists(_.compareTo(s) == 0)
-      prevSum = Some(s)
-      labels = next
-      it += 1
-      ClusterTelemetry.rounds.incrementAndGet()
-    }
-    edges.unpersist()
-    edgePairs.unpersist()
-    if (!converged) throw new IllegalStateException(
-      s"clusters did not converge in $maxIters rounds — raise maxIters " +
-        "(components of diameter > 2^maxIters are pathological for near-dup graphs)")
-    labels.select(col("id"), col("label").as("cluster"))
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR edge
@@ -1799,25 +1539,6 @@ object Dedup {
     df.join(drops, Seq(idCol), "left_anti")
   }
 
-  /** n-gram Jaccard similarity join within blocking keys, by inverted
-    * index: explode each doc's (distinct) shingle set, equi-join on
-    * (block, shingle), and COUNT the joined rows per pair — because
-    * the sets are distinct, that count IS |A∩B|, so Jaccard is pure
-    * arithmetic on (count, |A|, |B|) and no array ever crosses a
-    * shuffle. Pairs sharing zero shingles never materialize (hence
-    * `threshold` must be > 0; they'd have J = 0 anyway).
-    *
-    * Scale shape: the previous formulation joined whole blocks
-    * pairwise, carrying two ~50-element string arrays per candidate —
-    * quadratic in block size with ~kB rows. This one's join fanout is
-    * bounded by sum over (block, shingle) of df², with ~24-byte rows,
-    * and the per-pair count uses map-side partial aggregation on the
-    * join's existing (block, shingle) partitioning. A within-block
-    * stop-shingle ("of the") is the residual skew risk at 100 TB —
-    * AQE skew-join handles moderate cases; beyond that use
-    * [[ngramJaccardPairsPruned]], whose frequency-ordered PPJoin
-    * prefix keeps stop-shingles out of the index entirely.
-    */
   /** PPJoin-style prefix-filtered candidates for
     * [[ngramJaccardPairsPruned]]: each doc indexes only the FIRST
     * `|sh| - ceil(t·|sh|) + 1` shingles in a global
@@ -1842,8 +1563,9 @@ object Dedup {
       blockCols, threshold)
 
   /** [[ngramPrefixCandidates]] over a pre-shingled (blockCols*, id, sh)
-    * frame, so the caller can share one persisted shingle stage between
-    * candidate generation and Jaccard verification.
+    * frame, so the caller can share one shingle stage between
+    * candidate generation and Jaccard verification: distinct
+    * within-block id pairs sharing an indexed token.
     *
     * Singleton pruning (measured 2.2× at the 10×-documents tier): a
     * shingle with document frequency 1 can never witness a candidate
@@ -1856,15 +1578,12 @@ object Dedup {
     * rank(x) − n_singletons(doc) ≤ rank(x) — every token the full
     * ranking would index is still indexed (the kept set can only
     * GROW), so no qualifying pair loses its collision; the few extra
-    * candidates are killed by the exact-Jaccard verify.
+    * candidates are killed by the exact-Jaccard verify. (A global
+    * df-percentile precut that drops the ranking window altogether
+    * was measured a wash at the 100× tier and not adopted, SCALE.md
+    * r11.)
     */
-  /** The PPJoin prefix-index frame behind
-    * [[ngramPrefixCandidatesFromShingles]] — (blockCols*, tok, id, sz,
-    * __df, __rn) for every indexed (doc, prefix token). Exposed so the
-    * Tune variance probe can measure the index's per-token join fanout
-    * with the operator's OWN ranking (never a drifting re-implementation).
-    */
-  private[graft] def ngramPrefixIndex(shDf: DataFrame,
+  private[graft] def ngramPrefixCandidatesFromShingles(shDf: DataFrame,
       blockCols: Seq[String], threshold: Double): DataFrame = {
     val inv = shDf
       .select((blockCols.map(col) :+ col("id") :+ size(col("sh")).as("sz") :+
@@ -1874,22 +1593,10 @@ object Dedup {
     // ceil(t·sz) with a safety epsilon: float error must never round
     // the required overlap UP (a longer prefix is merely slower; a
     // shorter one drops pairs)
-    inv.join(freq.filter(col("__df") >= 2), Seq("tok"))
+    val prefix = inv.join(freq.filter(col("__df") >= 2), Seq("tok"))
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <=
         col("sz") - ceil(col("sz") * threshold - 1e-9) + 1)
-  }
-
-  private[graft] def ngramPrefixCandidatesFromShingles(shDf: DataFrame,
-      blockCols: Seq[String], threshold: Double): DataFrame =
-    candidatePairsFromIndex(ngramPrefixIndex(shDf, blockCols, threshold),
-      blockCols)
-
-  /** The (block, tok) self-join tail shared by every prefix-index
-    * variant: distinct within-block id pairs sharing an indexed token.
-    */
-  private def candidatePairsFromIndex(prefix: DataFrame,
-      blockCols: Seq[String]): DataFrame = {
     val a = prefix.select(
       (blockCols.map(col) :+ col("tok") :+ col("id").as("id_a")): _*)
     val b = prefix.select(
@@ -1898,109 +1605,6 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-  }
-
-  /** [[ngramPrefixCandidatesFromShingles]] with the per-doc ranking
-    * WINDOW replaced by a global df-percentile PRECUT — the structural
-    * answer to the measured 100×-tier slope of the exact-rank index
-    * (the pre-rank sort over every df>=2 (doc, token) row is
-    * threshold-independent and sort-bound: 27.8 GB of spill at p=32,
-    * SCALE.md r11).
-    *
-    * Correctness is a strict OVER-approximation of the exact PPJoin
-    * prefix, which the exact-Jaccard verify then reduces to the
-    * identical pair list (DedupSpec pins pairs-equality; the verify
-    * threshold filter is what q_ngram_prefix's oracle hashes):
-    *
-    *  - sort the doc's df>=2 tokens rarest-first; the exact prefix is
-    *    its first min(m, p) tokens (m = df>=2 token count,
-    *    p = |sh| - ceil(t·|sh|) + 1);
-    *  - tokens with df <= D form a PREFIX of that order (df ascending),
-    *    say the first j;
-    *  - if j >= p the first p tokens all have df <= D, so keeping ALL
-    *    the doc's df <= D tokens covers the exact prefix ("good" doc —
-    *    its df > D rows are dropped, no ranking needed);
-    *  - otherwise keep ALL the doc's df >= 2 tokens (trivially covers
-    *    the prefix; docs with m <= p are in this class and lose
-    *    nothing — the exact rank keeps all their tokens too).
-    *
-    * So: no window, no per-doc sort anywhere. The trade is extra
-    * candidates from the over-approximation (killed by the verify) —
-    * bounded, because the dropped rows are exactly the FREQUENT-token
-    * rows of docs that provably don't need them, i.e. the df² blowup
-    * buckets stay capped at D for every doc outside the (small)
-    * fallback class. D is picked on the driver from a df histogram
-    * (distinct-df-value scale — model-parameter sized, like the ANN
-    * pivots): the smallest D keeping `keepPct` of the df>=2 row mass.
-    *
-    * CACHE CONTRACT: registers the df table and the df-joined token
-    * stream in [[graft.ops.StageCache]] (three consumers: the per-doc
-    * count, the kept-rows union's two branches); callers release after
-    * consuming, as with [[minhashPairs]].
-    */
-  private[graft] def ngramPrefixCandidatesPrecut(shDf: DataFrame,
-      blockCols: Seq[String], threshold: Double,
-      keepPct: Double = 0.90): DataFrame = {
-    val inv = shDf
-      .select((blockCols.map(col) :+ col("id") :+ size(col("sh")).as("sz") :+
-        explode(col("sh")).as("tok")): _*)
-    val freq = graft.ops.StageCache.persisted(
-      inv.groupBy("tok").agg(count(lit(1)).as("__df"))
-        .filter(col("__df") >= 2))
-    // driver-side cutoff from the (df value -> token count) histogram;
-    // any D is CORRECT (the fallback class absorbs the rest), so the
-    // collect is a tuning scalar, not a correctness dependency
-    val hist = freq.groupBy("__df").agg(count(lit(1)).as("__n"))
-      .orderBy("__df")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val totalRows = hist.iterator.map { case (df, n) => df * n }.sum
-    var cum = 0L
-    var dCut = hist.lastOption.map(_._1).getOrElse(2L)
-    val it = hist.iterator
-    var found = false
-    while (it.hasNext && !found) {
-      val (df, n) = it.next()
-      cum += df * n
-      if (cum >= keepPct * totalRows) { dCut = df; found = true }
-    }
-    val inv2 = graft.ops.StageCache.persisted(inv.join(freq, Seq("tok")))
-    val low = inv2.filter(col("__df") <= dCut)
-    val high = inv2.filter(col("__df") > dCut)
-    // required overlap p, same safety epsilon as ngramPrefixIndex
-    def pReq(sz: Column): Column = sz - ceil(sz * threshold - 1e-9) + 1
-    // docs whose df<=D token count covers their required prefix: their
-    // df>D rows can be dropped. Computed from the low stream only —
-    // docs with NO df<=D tokens are absent here, land in the fallback
-    // class via the anti join, and keep everything (correct: j = 0 < p)
-    val goodIds = low.groupBy("id")
-      .agg(count(lit(1)).as("__j"), max("sz").as("__sz"))
-      .filter(col("__j") >= pReq(col("__sz")))
-      .select("id")
-    val prefix = low.unionByName(
-      high.join(goodIds, Seq("id"), "left_anti"))
-    candidatePairsFromIndex(prefix, blockCols)
-  }
-
-  /** [[ngramJaccardPairsPruned]] with the precut candidate stage —
-    * identical verified pairs (the exact-Jaccard filter is the same),
-    * no ranking window anywhere in the plan.
-    */
-  def ngramJaccardPairsPrecut(df: DataFrame, idCol: String, textCol: String,
-      blockCols: Seq[String], n: Int = 2, threshold: Double = 0.2,
-      keepPct: Double = 0.90): DataFrame = {
-    require(threshold > 0,
-      "ngramJaccardPairsPrecut prunes by required overlap; threshold must be > 0")
-    val docs = graft.ops.InputLayout.spread(df, col(idCol))
-      .select((blockCols.map(col) :+ col(idCol).as("id") :+
-        shingles(col(textCol), n).as("sh")): _*)
-    ngramPrefixCandidatesPrecut(docs, blockCols, threshold, keepPct)
-      .join(docs.select(col("id").as("id_a"),
-        hashedSh(col("sh")).as("sh_a")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"),
-        hashedSh(col("sh")).as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        jaccard(col("sh_a"), col("sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
   }
 
   /** [[ngramJaccardPairs]] with the PPJoin prefix filter: candidates
@@ -2064,6 +1668,25 @@ object Dedup {
       .agg(count(lit(1)).as("inter"))
   }
 
+  /** n-gram Jaccard similarity join within blocking keys, by inverted
+    * index: explode each doc's (distinct) shingle set, equi-join on
+    * (block, shingle), and COUNT the joined rows per pair — because
+    * the sets are distinct, that count IS |A∩B|, so Jaccard is pure
+    * arithmetic on (count, |A|, |B|) and no array ever crosses a
+    * shuffle. Pairs sharing zero shingles never materialize (hence
+    * `threshold` must be > 0; they'd have J = 0 anyway).
+    *
+    * Scale shape: the previous formulation joined whole blocks
+    * pairwise, carrying two ~50-element string arrays per candidate —
+    * quadratic in block size with ~kB rows. This one's join fanout is
+    * bounded by sum over (block, shingle) of df², with ~24-byte rows,
+    * and the per-pair count uses map-side partial aggregation on the
+    * join's existing (block, shingle) partitioning. A within-block
+    * stop-shingle ("of the") is the residual skew risk at 100 TB —
+    * AQE skew-join handles moderate cases; beyond that use
+    * [[ngramJaccardPairsPruned]], whose frequency-ordered PPJoin
+    * prefix keeps stop-shingles out of the index entirely.
+    */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       blockCols: Seq[String], n: Int = 2, threshold: Double = 0.2): DataFrame = {
     require(threshold > 0,

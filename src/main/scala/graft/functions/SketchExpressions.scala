@@ -269,13 +269,13 @@ object SketchOps {
     n
   }
 
-  /** [[sortedIntersectSizeLong]] over SORTED int arrays — the
-    * truncated-hash pre-verify representation (high 32 bits of each
-    * xxhash64, still sorted because `x >> 32` is monotone over signed
-    * longs). Truncation preserves equality, so for multisets the
+  /** [[sortedIntersectSizeLong]] over SORTED int arrays — e.g. a
+    * 32-bit truncation of the hashed representation (high 32 bits of
+    * each xxhash64, still sorted because `x >> 32` is monotone over
+    * signed longs). Truncation preserves equality, so for multisets the
     * truncated intersect is an UPPER BOUND on the 64-bit intersect
     * (min is superadditive over the preimage counts), which makes the
-    * truncated Jaccard a sound >= bound — the pre-verify's drop rule.
+    * truncated Jaccard a sound >= bound.
     */
   def sortedIntersectSizeInt(a: ArrayData, b: ArrayData): Int = {
     var i = 0
@@ -293,12 +293,13 @@ object SketchOps {
     n
   }
 
-  /** [[sortedIntersectSizeInt]] over SORTED short arrays — the 16-bit
-    * pre-verify tier (high 16 bits of each xxhash64): 2 bytes/element,
-    * a quarter of the exact form's exchange bytes, same upper-bound
-    * soundness (truncation preserves equality); the looser bound costs
-    * ~|A|·|B|/2¹⁶ expected spurious intersections per pair (~0.04 at
-    * the measured m≈51), false survivors only, never wrong answers.
+  /** [[sortedIntersectSizeInt]] over SORTED short arrays — the
+    * pre-verify representation (high 16 bits of each xxhash64):
+    * 2 bytes/element, a quarter of the exact form's exchange bytes,
+    * same upper-bound soundness (truncation preserves equality); the
+    * looser bound costs ~|A|·|B|/2¹⁶ expected spurious intersections
+    * per pair (~0.04 at the measured m≈51), false survivors only,
+    * never wrong answers.
     */
   def sortedIntersectSizeShort(a: ArrayData, b: ArrayData): Int = {
     var i = 0
@@ -447,8 +448,8 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   // polymorphic over the four sorted representations: raw shingle
   // strings (the staged-index/oracle form), xxhash64 longs (the
   // hashed-verify form — see SketchOps.sortedIntersectSizeLong), and
-  // truncated ints/shorts (the pre-verify bound forms —
-  // SketchOps.sortedIntersectSizeInt/Short)
+  // truncated shorts (the pre-verify bound form) or ints —
+  // SketchOps.sortedIntersectSizeShort/Int
   private def walkFn: String = left.dataType match {
     case ArrayType(LongType, _) => "sortedIntersectSizeLong"
     case ArrayType(IntegerType, _) => "sortedIntersectSizeInt"

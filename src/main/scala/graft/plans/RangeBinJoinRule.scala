@@ -36,7 +36,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
   * timestamps are binned via `unix_micros`, NTZ cast in the session
   * zone. The rewrite is idempotent: the bin-equality conjunct it adds
   * makes the join carry a cross-side equality, which disqualifies it
-  * from matching again.
+  * from matching again. A value of either conf key that is not a whole
+  * number raises an IllegalArgumentException naming the key.
   *
   * Deploy: `spark.sql.extensions=graft.GraftExtensions`, or
   * imperatively via `spark.experimental.extraOptimizations`.
@@ -98,11 +99,21 @@ object RangeBinJoinRule extends Rule[LogicalPlan] {
     case _ => Seq.empty
   }
 
+  /** Long value of conf `key`; a malformed value fails naming the key
+    * instead of silently disabling the rule or its guard.
+    */
+  private def longConf(key: String, default: Long): Long = {
+    val raw = conf.getConfString(key, default.toString)
+    try raw.toLong catch {
+      case _: NumberFormatException => throw new IllegalArgumentException(
+        s"$key must be a whole number, got '$raw'")
+    }
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val binSeconds =
-      try conf.getConfString(binSecondsKey, "0").toLong
-      catch { case _: NumberFormatException => 0L }
+    val binSeconds = longConf(binSecondsKey, 0L)
     if (binSeconds <= 0) return plan
+    val maxBins = longConf(maxBinsKey, maxBinsDefault)
     val binUs = binSeconds * 1000000L
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint)
@@ -139,10 +150,6 @@ object RangeBinJoinRule extends Rule[LogicalPlan] {
           pattern match {
             case None => j
             case Some((lo, hi, pointOnLeft)) =>
-              val maxBins =
-                try conf.getConfString(maxBinsKey,
-                  maxBinsDefault.toString).toLong
-                catch { case _: NumberFormatException => maxBinsDefault }
               rewrite(j, lo, hi, pointOnLeft, binUs, maxBins)
           }
         }

@@ -39,20 +39,16 @@ object CorpusStreams {
     * NO re-delivery protection — replaying it admits it again. Filter
     * sub-n-token docs upstream if the source can re-deliver.
     *
-    * `verifyMinPairs` routes the verify stage (see
-    * [[Dedup.verifyRendezvous]]): the default forces the carry shape
-    * WITHOUT the size gate's pair-table persist + count job — one
-    * fewer scheduled job per micro-batch, the fixed cost that
-    * dominates continuous ingest (SCALE.md r12) — and is correct by
-    * contract for micro-batches, which sit far below the rendezvous
-    * crossover. A BULK BACKFILL calling this directly with a
-    * corpus-scale batch should pass [[Dedup.VerifyUseConf]] to
-    * restore the measured size gate.
+    * The verify stage always takes the carry shape (see
+    * [[Dedup.admissionDrops]]) WITHOUT the size gate's pair-table
+    * persist + count job — one fewer scheduled job per micro-batch, the
+    * fixed cost that dominates continuous ingest (SCALE.md r12) — which
+    * is correct by contract for micro-batches: they sit far below the
+    * rendezvous crossover.
     */
   def admitBatch(batch: DataFrame, indexDir: String, idCol: String,
       textCol: String, n: Int = 2, k: Int = 16, bands: Int = 8,
-      threshold: Double = 0.3, fastKernel: Boolean = true,
-      verifyMinPairs: Long = Dedup.VerifyForceCarry): DataFrame = {
+      threshold: Double = 0.3, fastKernel: Boolean = true): DataFrame = {
     val spark = batch.sparkSession
     val shPath = s"$indexDir/shingles"
     val bkPath = s"$indexDir/buckets"
@@ -86,7 +82,7 @@ object CorpusStreams {
     //
     // repr=xxh64 (r13) versions the STAGED SHINGLE REPRESENTATION:
     // new indexes stage sorted xxhash64 longs instead of raw shingle
-    // strings. What this buys, measured (Tune repr, 10× tier): probe
+    // strings. What this buys, measured (SCALE.md r13, 10× tier): probe
     // EXCHANGES ship the staged longs as-is (the ~3-4× bytes win the
     // r12 hashed-verify fix measured lives in shuffle format, which
     // is row-oriented LZ4), and a probe pays no per-batch corpus-side
@@ -146,15 +142,13 @@ object CorpusStreams {
     // and one verify stage. Per-batch fixed cost is the term a
     // continuous ingest multiplies by batch count: measured 27 → 19
     // scheduled jobs (−30%) for the steady-state probe batch at the
-    // 10× tier (graft.JobProbe; bootstrap ties at 17 — no staged probe
-    // to fuse), identical admitted set and staged index (asserted by
-    // JobProbe and Tune ab admit, SCALE.md r12).
+    // 10× tier (bootstrap ties at 17 — no staged probe to fuse), with
+    // an identical admitted set and staged index (SCALE.md r12).
     val staged =
       if (!hasIndex) None
       else Some(Dedup.MinhashIndex(
         spark.read.parquet(shPath), spark.read.parquet(bkPath)))
-    val drops = Dedup.admissionDrops(batchIdx, staged, threshold,
-        verifyMinPairs)
+    val drops = Dedup.admissionDrops(batchIdx, staged, threshold)
       .withColumnRenamed("id", idCol)
     val admitted = batch.join(drops, Seq(idCol), "left_anti")
     // materialize BEFORE the append: the anti join above lazily reads

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test JVM. */
@@ -22,8 +23,15 @@ object SparkTestSession {
   }
 }
 
-abstract class SparkTestBase extends AnyFunSuite {
+abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** Release the stages the test's operators persisted: the shared
+    * session outlives the test, and a later test building the same
+    * stage would otherwise ask to cache already-cached data.
+    */
+  override protected def afterEach(): Unit =
+    try graft.ops.StageCache.releaseAll() finally super.afterEach()
 
   /** Run `body` with the given SQL confs set, restoring priors after. */
   def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {

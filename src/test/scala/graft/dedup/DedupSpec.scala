@@ -133,38 +133,6 @@ class DedupSpec extends SparkTestBase {
     assert(prefCand >= pruned.size)
   }
 
-  test("precut prefix prune: same pairs as unpruned, no ranking window") {
-    import org.apache.spark.sql.functions.col
-    val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    def key(df: org.apache.spark.sql.DataFrame) = df
-      .select("id_a", "id_b", "jaccard")
-      .as[(Long, Long, Double)].collect().toSet
-    val unpruned = key(Dedup.ngramJaccardPairs(
-      real, "doc_id", "text", Seq("lang", "source"), n = 2, threshold = 0.09))
-    val precut = Dedup.ngramJaccardPairsPrecut(
-      real, "doc_id", "text", Seq("lang", "source"), n = 2, threshold = 0.09)
-    assert(key(precut) === unpruned)
-    assert(unpruned.nonEmpty)
-    // structural pin: the precut plan contains NO window operator — the
-    // per-doc ranking sort (the measured 100x slope) is gone entirely
-    val plan = precut.queryExecution.optimizedPlan.toString
-    assert(!plan.contains("Window"),
-      "precut candidates must not contain a ranking window")
-    // candidate bounds: a (possibly equal) superset of the exact-rank
-    // prefix candidates, never more than the any-shared-token set
-    val shDf = real.select(col("lang"), col("source"),
-      col("doc_id").as("id"), Dedup.shingles(col("text"), 2).as("sh"))
-    val exactCand = Dedup.ngramPrefixCandidatesFromShingles(
-      shDf, Seq("lang", "source"), 0.09)
-      .as[(Long, Long)].collect().toSet
-    val precutCand = Dedup.ngramPrefixCandidatesPrecut(
-      shDf, Seq("lang", "source"), 0.09)
-      .as[(Long, Long)].collect().toSet
-    assert(exactCand.subsetOf(precutCand),
-      "precut must over-approximate the exact PPJoin prefix candidates")
-    graft.ops.StageCache.releaseAll()
-  }
-
   test("hashed verify: Jaccard over xxhash64 longs ≡ Jaccard over shingle strings") {
     // the verify joins now exchange sorted xxhash64 arrays instead of
     // raw shingle strings (SCALE.md r12: bytes-per-exchange wall at the
@@ -195,22 +163,6 @@ class DedupSpec extends SparkTestBase {
     val got = Dedup.clusters(pairs).orderBy("id")
       .as[(Long, Long)].collect().toSeq
     assert(got === Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (7L, 5L)))
-  }
-
-  test("clustersLabelProp: long chain converges in log rounds") {
-    // the legacy distributed route (pre-r12 default, kept for the Tune
-    // cc A/B): a 60-node path needs 59 plain-propagation rounds —
-    // pointer jumping must close it well inside maxIters=20
-    val chain = (1L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    Dedup.ClusterTelemetry.reset()
-    val got = Dedup.clustersLabelProp(chain).as[(Long, Long)].collect()
-    assert(got.length === 60 && got.forall(_._2 === 1L))
-    // round-count pin (the distributed path's 100 TB cost model is
-    // rounds x fixed per-round latency): path halving closes a
-    // 60-node chain in ~log2(59) label moves + 1 equal-sum detection
-    // round. A regression to plain neighbor propagation would need 59.
-    val rounds = Dedup.ClusterTelemetry.rounds.get()
-    assert(rounds <= 8, s"pointer jumping regressed: $rounds rounds for a 60-chain")
   }
 
   test("clusters: driver and distributed paths agree") {
@@ -419,13 +371,28 @@ class DedupSpec extends SparkTestBase {
     // sharing, including WITHIN-doc repeats; an independent
     // plain-Scala keep-first implementation is the oracle
     val k = 2
-    val rnd = new scala.util.Random(23)
-    val vocab = Vector("a", "b", "c")
-    val corpus: Seq[(Long, String)] = (1L to 150L).map { i =>
-      val len = 1 + rnd.nextInt(8)
-      (i, (0 until len).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" "))
+    val dupRich: Seq[(Long, String)] = {
+      val rnd = new scala.util.Random(23)
+      val vocab = Vector("a", "b", "c")
+      (1L to 150L).map { i =>
+        val len = 1 + rnd.nextInt(8)
+        (i, (0 until len).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" "))
+      }
     }
-    val expected = {
+    // hot key: every third doc opens with the same boilerplate
+    // paragraph "x y", so the winner per digest is contested across
+    // many docs — the case the WindowGroupLimit window must still
+    // resolve to the lowest (id, pos)
+    val hotKey: Seq[(Long, String)] = {
+      val rnd = new scala.util.Random(7)
+      val vocab = Vector("a", "b", "c", "d")
+      (1L to 80L).map { i =>
+        val len = 1 + rnd.nextInt(7)
+        val body = (0 until len).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
+        (i, if (i % 3 == 0) s"x y $body" else body)
+      }
+    }
+    def reference(corpus: Seq[(Long, String)]) = {
       val seen = scala.collection.mutable.Set.empty[String]
       corpus.sortBy(_._1).map { case (id, t) =>
         val tr = t.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
@@ -437,32 +404,19 @@ class DedupSpec extends SparkTestBase {
           md5hex(kept.mkString(" ")))
       }
     }
-    val got = Dedup.paragraphDedup(corpus.toDF("doc_id", "text"),
-        "doc_id", "text", k)
-      .orderBy("doc_id").as[(Long, Long, Long, String)].collect().toSeq
-    assert(got === expected)
-    assert(expected.exists(_._3 == 0L),
-      "fixture should fully dedup at least one doc")
-    assert(expected.exists(r => r._3 > 0L && r._3 < r._2),
-      "fixture should partially dedup at least one doc")
-  }
-
-  test("paragraphDedup ≡ agg+join harness twin (incl. hot key)") {
-    // the Tune paraskew A/B is only meaningful if the two plans
-    // compute the same function; a shared boilerplate paragraph makes
-    // the winner rule actually contested across docs
-    val rnd = new scala.util.Random(7)
-    val vocab = Vector("a", "b", "c", "d")
-    val corpus = (1L to 80L).map { i =>
-      val len = 1 + rnd.nextInt(7)
-      val body = (0 until len).map(_ => vocab(rnd.nextInt(vocab.size))).mkString(" ")
-      (i, if (i % 3 == 0) s"x y $body" else body)
-    }.toDF("doc_id", "text")
-    val a = Dedup.paragraphDedup(corpus, "doc_id", "text", k = 2)
-      .orderBy("doc_id").collect().toSeq
-    val b = Dedup.paragraphDedupAggJoin(corpus, "doc_id", "text", k = 2)
-      .orderBy("doc_id").collect().toSeq
-    assert(a === b)
+    for ((name, corpus) <- Seq("dup-rich" -> dupRich, "hot-key" -> hotKey)) {
+      val expected = reference(corpus)
+      val got = Dedup.paragraphDedup(corpus.toDF("doc_id", "text"),
+          "doc_id", "text", k)
+        .orderBy("doc_id").as[(Long, Long, Long, String)].collect().toSeq
+      assert(got === expected, name)
+      assert(expected.exists(_._3 == 0L),
+        s"$name fixture should fully dedup at least one doc")
+      assert(expected.exists(r => r._3 > 0L && r._3 < r._2),
+        s"$name fixture should partially dedup at least one doc")
+    }
+    assert(hotKey.count(_._2.startsWith("x y ")) >= 20,
+      "hot-key fixture should repeat the boilerplate paragraph")
   }
 
   test("paragraphDedupWithinDoc: order-preserving per-doc keep-first") {
@@ -567,16 +521,14 @@ class DedupSpec extends SparkTestBase {
     val bcast = Dedup.minhashPairsBroadcastIndex(benchIdx, probe,
         "doc_id", "text", threshold = 0.1, maxIndexDocs = 0L)
       .as[(Long, Long, Double)].collect().toSet
-    val fellBack = Dedup.minhashPairsBroadcastIndex(benchIdx, probe,
+    val fellBackDf = Dedup.minhashPairsBroadcastIndex(benchIdx, probe,
         "doc_id", "text", threshold = 0.1, maxIndexDocs = 1L)
-      .as[(Long, Long, Double)].collect().toSet
+    val fellBack = fellBackDf.as[(Long, Long, Double)].collect().toSet
     assert(fellBack === bcast)
     assert(fellBack.nonEmpty, "fixture should produce cross near-dups")
     // and the fallback plan really is the incremental shape: no
     // broadcast of the index's shingle table
-    val plan = Dedup.minhashPairsBroadcastIndex(benchIdx, probe,
-        "doc_id", "text", threshold = 0.1, maxIndexDocs = 1L)
-      .queryExecution.optimizedPlan.toString
+    val plan = fellBackDf.queryExecution.optimizedPlan.toString
     assert(!plan.contains("ResolvedHint"),
       "above the cap no explicit broadcast hint may survive")
   }
@@ -596,12 +548,15 @@ class DedupSpec extends SparkTestBase {
         Dedup.hashShingles($"sh").as("sh"))
       .write.parquet(s"$dir/sh_xxh")
     built.buckets.write.parquet(s"$dir/bk")
+    // both probes persist the same pair table (it depends on the
+    // buckets only): release it between them
     def probeWith(shPath: String): Set[(Long, Long, Double)] =
-      Dedup.incrementalMinhashPairsFromIndex(
-        Dedup.MinhashIndex(spark.read.parquet(shPath),
-          spark.read.parquet(s"$dir/bk")),
-        Dedup.minhashIndexView(delta, "doc_id", "text"), 0.1)
+      try Dedup.incrementalMinhashPairsFromIndex(
+          Dedup.MinhashIndex(spark.read.parquet(shPath),
+            spark.read.parquet(s"$dir/bk")),
+          Dedup.minhashIndexView(delta, "doc_id", "text"), 0.1)
         .as[(Long, Long, Double)].collect().toSet
+      finally graft.ops.StageCache.releaseAll()
     val viaStr = probeWith(s"$dir/sh_str")
     val viaXxh = probeWith(s"$dir/sh_xxh")
     assert(spark.read.parquet(s"$dir/sh_xxh").schema("sh").dataType
@@ -812,6 +767,7 @@ class DedupSpec extends SparkTestBase {
       .as[(Long, Long, Double)].collect().toSet
     assert(rv === carry)
     assert(rv.nonEmpty, "cross pairs must form")
+    graft.ops.StageCache.releaseAll() // rvH persists the same pair table
     // staged-hashed corpus side (repr=xxh64): both shapes dispatch on
     // the schema and must agree with each other AND with the raw run
     val hashedSh = cIdx.shingles.select($"id",
@@ -824,36 +780,6 @@ class DedupSpec extends SparkTestBase {
       .as[(Long, Long, Double)].collect().toSet
     assert(rvH === carryH)
     assert(rvH === rv)
-  }
-
-  test("broadcast probe two-sided gate: the product term alone routes to fallback") {
-    // r14: the r13 fuzzyxo sweep pinned the crossover as a
-    // corpus×index INTERACTION — the gate's second term. With the
-    // absolute index cap slack, a tiny product cap must still pick
-    // the big-vs-big plan (no broadcast hint), and a disabled product
-    // term must keep the broadcast plan; results identical either way.
-    val bench = docs.filter($"doc_id" % 2 === 0)
-    val probe = docs.filter($"doc_id" % 2 === 1)
-    val benchIdx = Dedup.minhashIndexView(bench, "doc_id", "text")
-    def planOf(maxProduct: Long): String =
-      Dedup.minhashPairsBroadcastIndex(benchIdx, probe, "doc_id", "text",
-        threshold = 0.1, maxIndexDocs = 1000000L,
-        maxProductDocs = maxProduct)
-        .queryExecution.optimizedPlan.toString
-    // marker: in optimizedPlan the broadcast() hint survives as a
-    // JoinHint (strategy=broadcast) — ResolvedHint nodes are already
-    // eliminated at that stage
-    assert(!planOf(1L).contains("strategy=broadcast"),
-      "product cap of 1 must route to the incremental fallback")
-    assert(planOf(0L).contains("strategy=broadcast"),
-      "disabled product term must keep the broadcast plan")
-    def rows(maxProduct: Long): Set[(Long, Long, Double)] =
-      Dedup.minhashPairsBroadcastIndex(benchIdx, probe, "doc_id", "text",
-        threshold = 0.1, maxIndexDocs = 1000000L,
-        maxProductDocs = maxProduct)
-        .as[(Long, Long, Double)].collect().toSet
-    assert(rows(1L) === rows(0L))
-    assert(rows(0L).nonEmpty)
   }
 
   test("paragraphDedupNewline: keep-first over \\n paragraphs incl. empty runs") {
@@ -926,6 +852,7 @@ class DedupSpec extends SparkTestBase {
             if e.output.exists(_.name == "sh_a") => e
         }
       assert(carryEx.nonEmpty, "carry twin must exchange sh_a")
+      graft.ops.StageCache.releaseAll()
       // and the DEFAULT size gate routes this tiny candidate set to
       // the carry shape (broadcast-friendly small side of the
       // measured crossover): per-pair arrays re-appear in the plan
@@ -941,37 +868,32 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
-  test("rendezvous size gate reads spark.graft.rendezvousMinPairs at call time") {
-    // one routing pin per gate side (r14 task 5): the session conf —
-    // not the compiled-in host constant — decides the shape when the
-    // caller leaves minPairs at its VerifyUseConf default. AQE/
-    // broadcast off so the tiny fixture plans the at-scale SMJ shape
-    // the sh_a-exchange marker distinguishes.
+  test("rendezvous size gate routes by candidate count: one pin per gate side") {
+    // the gate is a COUNT threshold over the persisted pair table:
+    // a candidate count at or above minPairs takes the rendezvous
+    // shape, below it the carry shape. AQE/broadcast off so the tiny
+    // fixture plans the at-scale SMJ shape the sh_a-exchange marker
+    // distinguishes.
     withSQLConf(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val idx = Dedup.minhashIndexView(rvFixture, "doc_id", "text")
-      def shAExchanges(): Int = {
-        val ex = Dedup.verifyRendezvous(
-            Dedup.selfCollisions(idx), idx.shingles, idx.shingles)
+      def shAExchanges(minPairs: Long): Int =
+        try Dedup.verifyRendezvous(
+            Dedup.selfCollisions(idx), idx.shingles, idx.shingles, minPairs)
           .queryExecution.executedPlan.collect {
             case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
               if e.output.exists(_.name == "sh_a") => e
-          }
-        ex.size
-      }
-      // gate lowered to 1: the fixture's candidate count clears it ->
-      // the rendezvous shape (no exchange carries per-pair arrays)
-      withSQLConf(Dedup.RendezvousMinPairsConfKey -> "1") {
-        assert(shAExchanges() === 0,
-          "conf gate of 1 must route to the rendezvous shape")
-      }
-      // gate raised past any candidate count -> the carry shape (the
-      // per-pair array exchange re-appears)
-      withSQLConf(Dedup.RendezvousMinPairsConfKey -> Long.MaxValue.toString) {
-        assert(shAExchanges() > 0,
-          "a maxed-out conf gate must route to the carry shape")
-      }
+          }.size
+        finally graft.ops.StageCache.releaseAll()
+      // gate of 1: the fixture's candidate count clears it -> the
+      // rendezvous shape (no exchange carries per-pair arrays)
+      assert(shAExchanges(1L) === 0,
+        "a gate of 1 must route to the rendezvous shape")
+      // gate past any candidate count -> the carry shape (the per-pair
+      // array exchange re-appears)
+      assert(shAExchanges(Long.MaxValue) > 0,
+        "a maxed-out gate must route to the carry shape")
       graft.ops.StageCache.releaseAll()
     }
   }
@@ -1015,35 +937,34 @@ class DedupSpec extends SparkTestBase {
     // the r16 pre-verify's equivalence pin: the thresholded verify
     // must emit EXACTLY the rows of the one-phase verify followed by
     // the threshold filter — per route (forced carry / small gate /
-    // big gate with the prefilter on AND off), per kernel, and at
+    // big gate with the 16-bit prefilter), per kernel, and at
     // thresholds that both drop and keep pairs on this fixture.
     val corpus = rvFixture
     for (fast <- Seq(true, false); threshold <- Seq(0.1, 0.5, 0.95)) {
       val idx = Dedup.minhashIndexView(corpus, "doc_id", "text",
         fastKernel = fast)
       val coll = Dedup.selfCollisions(idx)
+      // every route persists the same pair table: release it after
+      // each collect
       val expect = Dedup.verifyRendezvous(coll, idx.shingles, idx.shingles,
           minPairs = 0L)
         .filter($"jaccard" >= threshold)
         .as[(Long, Long, Double)].collect().toSet
-      for ((route, minPairs, pf) <- Seq(
-          ("forced-carry", Dedup.VerifyForceCarry, "16"),
-          ("small-gate", Long.MaxValue, "16"),
-          ("big-gate+prefilter16", 0L, "16"),
-          ("big-gate+prefilter32", 0L, "32"),
-          ("big-gate one-phase", 0L, "off"))) {
-        val got = withSQLConf(Dedup.VerifyPrefilterConfKey -> pf) {
-          Dedup.verifyRendezvousThresholded(coll, idx.shingles,
-              idx.shingles, threshold, minPairs)
-            .as[(Long, Long, Double)].collect().toSet
-        }
+      graft.ops.StageCache.releaseAll()
+      for ((route, minPairs) <- Seq(
+          ("forced-carry", Dedup.VerifyForceCarry),
+          ("small-gate", Long.MaxValue),
+          ("big-gate+prefilter16", 0L))) {
+        val got = Dedup.verifyRendezvousThresholded(coll, idx.shingles,
+            idx.shingles, threshold, minPairs)
+          .as[(Long, Long, Double)].collect().toSet
+        graft.ops.StageCache.releaseAll()
         assert(got === expect,
           s"route=$route fast=$fast threshold=$threshold")
       }
       // at the low threshold the fixture must actually keep pairs, at
       // the top it must actually drop some — else the pin is vacuous
       if (threshold == 0.1) assert(expect.size >= 12 * 3)
-      graft.ops.StageCache.releaseAll()
     }
   }
 
@@ -1063,52 +984,29 @@ class DedupSpec extends SparkTestBase {
         minPairs = 0L)
       .filter($"jaccard" >= 0.3)
       .as[(Long, Long, Double)].collect().toSet
-    val got = withSQLConf(Dedup.VerifyPrefilterConfKey -> "true") {
-      Dedup.verifyRendezvousThresholded(coll, dIdx.shingles, hIdx.shingles,
-          0.3, minPairs = 0L)
-        .as[(Long, Long, Double)].collect().toSet
-    }
+    graft.ops.StageCache.releaseAll()
+    val got = Dedup.verifyRendezvousThresholded(coll, dIdx.shingles,
+        hIdx.shingles, 0.3, minPairs = 0L)
+      .as[(Long, Long, Double)].collect().toSet
     assert(got === expect)
     assert(got.nonEmpty, "cross pairs must survive at 0.3")
     graft.ops.StageCache.releaseAll()
   }
 
-  test("verify prefilter conf routes at call time") {
-    // spark.graft.verifyPrefilter is read when the plan is BUILT. Two
-    // independent markers, because the truncation projection hides
-    // inside the persisted survivor stage's cached plan (not printable
-    // from the outer plan string): (1) the two-phase shape registers
-    // TWO StageCache stages (pair table + phase-1 survivors) where the
-    // one-phase shape registers one; (2) the survivor stage's OWN
-    // cached plan — the last registered frame — carries the
-    // shiftright(x, 32) truncation.
+  test("big-gate thresholded verify registers 2 StageCache stages") {
+    // the truncation projection hides inside the persisted survivor
+    // stage's cached plan (not printable from the outer plan string),
+    // so the two-phase shape is pinned by its registrations: the pair
+    // table AND the phase-1 survivors
+    graft.ops.StageCache.releaseAll()
     val idx = Dedup.minhashIndexView(rvFixture, "doc_id", "text")
-    def registrations(pf: String): Int = {
-      graft.ops.StageCache.releaseAll()
-      val before = graft.ops.StageCache.registeredCount
-      withSQLConf(Dedup.VerifyPrefilterConfKey -> pf) {
-        Dedup.verifyRendezvousThresholded(
-            Dedup.selfCollisions(idx), idx.shingles, idx.shingles,
-            0.5, minPairs = 0L)
-          .collect()
-      }
-      graft.ops.StageCache.registeredCount - before
-    }
-    assert(registrations("16") === 2,
-      "prefilter 16 must persist pair table AND phase-1 survivors")
-    assert(registrations("32") === 2,
-      "prefilter 32 must persist pair table AND phase-1 survivors")
-    assert(registrations("off") === 1,
-      "prefilter off must persist only the pair table")
-    // malformed conf fails with the key named, at construction
-    val e = intercept[IllegalArgumentException] {
-      withSQLConf(Dedup.VerifyPrefilterConfKey -> "maybe") {
-        Dedup.verifyRendezvousThresholded(
-          Dedup.selfCollisions(idx), idx.shingles, idx.shingles,
-          0.5, minPairs = 0L)
-      }
-    }
-    assert(e.getMessage.contains(Dedup.VerifyPrefilterConfKey))
+    val before = graft.ops.StageCache.registeredCount
+    Dedup.verifyRendezvousThresholded(
+        Dedup.selfCollisions(idx), idx.shingles, idx.shingles,
+        0.5, minPairs = 0L)
+      .collect()
+    assert(graft.ops.StageCache.registeredCount - before === 2,
+      "the pre-verify must persist pair table AND phase-1 survivors")
     graft.ops.StageCache.releaseAll()
   }
 

@@ -154,6 +154,29 @@ class RangeBinJoinRuleSpec extends SparkTestBase {
     } finally spark.conf.unset(RangeBinJoinRule.maxBinsKey)
   }
 
+  private def namedConfError(key: String, value: String): Unit = {
+    val cond = col("ts") >= col("lo") && col("ts") < col("hi")
+    val e = intercept[IllegalArgumentException] {
+      withRule(600L) {
+        spark.conf.set(key, value)
+        ivDf.join(ptDf, cond).queryExecution.optimizedPlan
+      }
+    }
+    assert(e.getMessage.contains(key) && e.getMessage.contains(value),
+      e.getMessage)
+  }
+
+  test("malformed binSeconds fails naming the key") {
+    // a typo must not silently switch the rewrite off
+    namedConfError(RangeBinJoinRule.binSecondsKey, "10m")
+  }
+
+  test("malformed maxBinsPerInterval fails naming the key") {
+    // a typo must not silently fall back to the default fanout cap
+    try namedConfError(RangeBinJoinRule.maxBinsKey, "lots")
+    finally spark.conf.unset(RangeBinJoinRule.maxBinsKey)
+  }
+
   test("sql surface: inequality join through spark.sql gets the rewrite") {
     ivDf.createOrReplaceTempView("rbj_iv")
     ptDf.createOrReplaceTempView("rbj_pt")
